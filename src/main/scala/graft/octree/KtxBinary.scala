@@ -100,16 +100,16 @@ object KtxBinary {
   /** Serialize one spatial block: (relpath, fileName, bytes). */
   private def serialize(bz: Long, by: Long, bx: Long,
       vox: Seq[(Long, Long, Long, Long, Long)]): (String, String, Array[Byte]) =
-    serializeAt(Levels, bz, by, bx, vox)
+    serializeAt(Levels, Levels, bz, by, bx, vox)
 
-  /** [[serialize]] for a block at an arbitrary pyramid `level` — the
-    * octant relpath shortens to level-1 digits and the
-    * multiscale_level_id kv entry tracks the level, everything else
-    * (header, mip chain, payload layout) is the leaf serialization
-    * verbatim. Used by [[OctreePipeline]] to emit the full per-level
-    * KTX tree.
+  /** [[serialize]] for a block at an arbitrary pyramid `level` of a
+    * `total`-deep tree — the octant relpath shortens to level-1 digits
+    * and the multiscale_level_id / multiscale_total_levels kv entries
+    * carry the level and the tree's depth, everything else (header,
+    * mip chain, payload layout) is the leaf serialization verbatim.
+    * Used by [[OctreePipeline]] to emit the full per-level KTX tree.
     */
-  private[octree] def serializeAt(level: Int, bz: Long, by: Long, bx: Long,
+  private[octree] def serializeAt(level: Int, total: Int, bz: Long, by: Long, bx: Long,
       vox: Seq[(Long, Long, Long, Long, Long)]): (String, String, Array[Byte]) = {
     val path = pathOfAt(level, bz, by, bx)
     // mip 0 grid, channels interleaved innermost
@@ -122,7 +122,7 @@ object KtxBinary {
     val nMips = 31 - Integer.numberOfLeadingZeros(Leaf) + 1
     // key-value section first (header needs its byte count)
     val kv = new java.io.ByteArrayOutputStream()
-    staticKvAt(level - 1, Levels, Channels).foreach { case (k, v) => putKv(kv, k, v) }
+    staticKvAt(level - 1, total, Channels).foreach { case (k, v) => putKv(kv, k, v) }
     putKv(kv, OctreePathKey, path.map(_.toString).mkString("/"))
     val kvBytes = kv.size().toLong
     // 13-field header (ktx/__init__.py:320 write order). numberOfFaces
@@ -191,6 +191,30 @@ object KtxBinary {
       }
   }
 
+  /** The key-value entries of one file, in file order (after checking
+    * the magic and the endianness marker).
+    */
+  private[graft] def keyValues(bytes: Array[Byte]): Seq[(String, String)] = {
+    require(bytes.take(12).sameElements(Magic), "bad KTX magic")
+    require(getU32(bytes, 12) == 0x04030201L, "bad endianness marker")
+    val kvBytes = getU32(bytes, 12 + 12 * 4)
+    val out = Seq.newBuilder[(String, String)]
+    var p = 64
+    while (p < 64 + kvBytes) {
+      val size = getU32(bytes, p).toInt
+      val entry = bytes.slice(p + 4, p + 4 + size)
+      val nul = entry.indexOf(0.toByte)
+      out += new String(entry.take(nul), "UTF-8") ->
+        new String(entry.slice(nul + 1, entry.length - 1), "UTF-8")
+      p += 4 + size + (3 - ((size + 3) % 4))
+    }
+    out.result()
+  }
+
+  /** The octant digits of the octree_path entry, '/' removed. */
+  private def octreePath(kv: Seq[(String, String)]): Option[String] =
+    kv.collectFirst { case (OctreePathKey, v) => v.replace("/", "") }
+
   /** Level-generic decode of one file's mip-0 payload: (level,
     * 1-based block coords, nonzero voxels (c, lz, ly, lx, v)). The
     * level is inferred from the octree_path kv entry's digit count
@@ -199,22 +223,9 @@ object KtxBinary {
     */
   private[octree] def decodeMip0Any(bytes: Array[Byte])
       : (Int, Long, Long, Long, Seq[(Long, Long, Long, Long, Long)]) = {
-    require(bytes.take(12).sameElements(Magic), "bad KTX magic")
-    require(getU32(bytes, 12) == 0x04030201L, "bad endianness marker")
+    val path = octreePath(keyValues(bytes))
+      .getOrElse(throw new IllegalArgumentException("octree_path kv entry missing"))
     val kvBytes = getU32(bytes, 12 + 12 * 4)
-    var p = 64
-    var path = ""
-    var seen = false
-    while (p < 64 + kvBytes) {
-      val size = getU32(bytes, p).toInt
-      val entry = bytes.slice(p + 4, p + 4 + size)
-      val nul = entry.indexOf(0.toByte)
-      val key = new String(entry.take(nul), "UTF-8")
-      val value = new String(entry.slice(nul + 1, entry.length - 1), "UTF-8")
-      if (key == OctreePathKey) { path = value.replace("/", ""); seen = true }
-      p += 4 + size + (3 - ((size + 3) % 4))
-    }
-    require(seen, "octree_path kv entry missing")
     val level = path.length + 1
     var (bz, by, bx) = (0L, 0L, 0L)
     path.zipWithIndex.foreach { case (ch, i) =>
@@ -239,23 +250,10 @@ object KtxBinary {
   //  mips: (mip, dim, mipBytes, offsetOfSizeField)
 
   private def decode(bytes: Array[Byte]): Parsed = {
-    require(bytes.take(12).sameElements(Magic), "bad KTX magic")
-    require(getU32(bytes, 12) == 0x04030201L, "bad endianness marker")
+    val path = octreePath(keyValues(bytes)).getOrElse("")
     val pixelWidth = getU32(bytes, 12 + 6 * 4)
     val nMips = getU32(bytes, 12 + 11 * 4).toInt
     val kvBytes = getU32(bytes, 12 + 12 * 4)
-    // walk the kv section for octree_path
-    var p = 64
-    var path = ""
-    while (p < 64 + kvBytes) {
-      val size = getU32(bytes, p).toInt
-      val entry = bytes.slice(p + 4, p + 4 + size)
-      val nul = entry.indexOf(0.toByte)
-      val key = new String(entry.take(nul), "UTF-8")
-      val value = new String(entry.slice(nul + 1, entry.length - 1), "UTF-8")
-      if (key == "octree_path") path = value.replace("/", "")
-      p += 4 + size + (3 - ((size + 3) % 4))
-    }
     require(path.nonEmpty, "octree_path kv entry missing")
     // invert pathOf: digit = 1 + bx_bit + 2*by_bit + 4*bz_bit
     var (bz, by, bx) = (0L, 0L, 0L)

@@ -299,50 +299,25 @@ object Pyramid {
     out.orderBy("level", "c", "z", "y", "x")
   }
 
-  /** Incremental pyramid maintenance — the ingest-batch path a 100 TB
-    * volume store runs instead of full rebuilds: a late-arriving
-    * delta of full-resolution voxels invalidates ONLY the pyramid
-    * cells whose subvoxel cubes contain a delta voxel (a cell at
-    * level lv depends on the 2^(levels−lv)-cube below it, so the
-    * affected key set at each level is the delta coords shifted
-    * right). The result splices, per level, the stale base-pyramid
-    * cells OUTSIDE the affected keys (anti join) with a pruned
-    * recompute of the affected region (semi join) — and must equal a
-    * full rebuild bit-for-bit, which the oracle asserts by sharing
-    * oct_pyramid's SQL verbatim.
+  /** Incremental pyramid maintenance — the pyramid of the volume
+    * after a late-arriving delta of full-resolution voxels joins the
+    * base voxels. Duplicate coordinates are not merged: a delta voxel
+    * at a base coordinate is one more row at that coordinate, exactly
+    * as in `apply(base.union(delta))`.
     *
-    * Scale shape: the recompute input is ONE semi join of the
-    * full-res scan against the ≤|delta| coarsest-level keys (every
-    * finer level's cube telescopes inside the coarsest cube, so one
-    * restriction feeds the whole recompute fold); recompute cost
-    * tracks the delta footprint, not the volume. Both pyramids are
-    * localCheckpoint'd before the per-level splices (the stored-table
-    * stand-in — a deployment reads the base pyramid from disk).
+    * Both inputs are voxels, so the output is the whole pyramid of
+    * base ∪ delta, and one fold over that union is the least work that
+    * produces it: every output cell depends on voxels of the union,
+    * and the fold computes each cell once, from the level below it.
+    * Splicing a recompute of the delta's region into a base pyramid
+    * saves work only when the base pyramid is already stored; built
+    * from base voxels inside the call, it costs a full fold plus a
+    * region fold plus two joins per level. A splice that takes a
+    * stored pyramid belongs beside this once a caller holds one.
     */
   def incremental(base: DataFrame, delta: DataFrame,
-      levels: Int = VoxelGrid.Levels, kernel: String = "arthur"): DataFrame = {
-    val smax = levels - 1
-    def keyed(df: DataFrame, s: Int): DataFrame = df
-      .withColumn("kz", shiftright(col("z"), s))
-      .withColumn("ky", shiftright(col("y"), s))
-      .withColumn("kx", shiftright(col("x"), s))
-    val regionKeys = keyed(delta, smax).select("c", "kz", "ky", "kx").distinct()
-    val region = keyed(base.union(delta), smax)
-      .join(regionKeys, Seq("c", "kz", "ky", "kx"), "left_semi")
-      .select("c", "z", "y", "x", "v")
-    val basePyr = apply(base, levels, kernel).localCheckpoint()
-    val freshPyr = apply(region, levels, kernel).localCheckpoint()
-    (1 to levels).map { lv =>
-      val s = levels - lv
-      val aff = delta.select(col("c"), shiftright(col("z"), s).as("z"),
-        shiftright(col("y"), s).as("y"), shiftright(col("x"), s).as("x")).distinct()
-      basePyr.filter(col("level") === lv)
-        .join(aff, Seq("c", "z", "y", "x"), "left_anti")
-        .union(freshPyr.filter(col("level") === lv)
-          .join(aff, Seq("c", "z", "y", "x"), "left_semi"))
-    }.reduce(_ union _)
-      .orderBy("level", "c", "z", "y", "x")
-  }
+      levels: Int = VoxelGrid.Levels, kernel: String = "arthur"): DataFrame =
+    apply(base.union(delta), levels, kernel)
 
   /** tiff2octree.py:312 `img_data.max() > 0` empty-block pruning, made
     * total: enumerate every block slot of the grid and flag the empty

@@ -1,5 +1,7 @@
 package graft.octree
 
+import org.apache.spark.GraftInputMetrics
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.VoxelGrid
@@ -28,10 +30,16 @@ import graft.VoxelGrid
   *
   * Scale shape: every stage is the already-audited distributed form —
   * the pyramid is the shrinking-key shuffle fold, block serialization
-  * is per-block `flatMapGroups` on executors, the resume listing is
-  * block keys only (broadcast — never voxels), and the parse is a
-  * distributed binaryFile scan. Nothing voxel-sized ever routes
-  * through the driver.
+  * runs in `defaultParallelism` executor tasks over a block-keyed
+  * shuffle, and one driver-side listing of the tree's file names
+  * (never voxels) serves the resume anti-set, the read-back and the
+  * audit; the read-back then reads and decodes the listed files in
+  * `defaultParallelism` executor tasks. Nothing voxel-sized ever
+  * routes through the driver.
+  *
+  * The tree lives on a filesystem every executor sees: the writer and
+  * the read-back open its files with local `java.io`, so in cluster
+  * mode `outRoot` must be a shared mount.
   */
 object OctreePipeline {
 
@@ -43,26 +51,73 @@ object OctreePipeline {
   private def relOf(level: Int, bz: Long, by: Long, bx: Long): String =
     KtxBinary.pathOfAt(level, bz, by, bx).map(_.toString).mkString("/")
 
-  /** Recursive relpath listing of an existing (partial) tree — the
-    * resume anti-set. File names only, so the broadcast is block keys
-    * at any scale (an object-store deployment lists the prefix the
-    * same way).
+  /** Sorted relpaths of every file under an existing (partial) tree —
+    * the one listing that the resume anti-set, the read-back and the
+    * audit share. File names only, never voxels (an object-store
+    * deployment lists the prefix the same way).
     */
-  private def listTree(outRoot: String): Set[String] = {
-    val root = new java.io.File(outRoot)
+  private def listTree(outRoot: String): Seq[String] = {
     def walk(f: java.io.File, rel: String): Seq[String] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.flatMap(c =>
           walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
       else Seq(rel)
-    if (!root.isDirectory) Set.empty else walk(root, "").toSet
+    val root = new java.io.File(outRoot)
+    if (!root.isDirectory) Nil else walk(root, "").sorted
+  }
+
+  /** (relpath, bytes) of the listed tree files ending in `suffix`, read
+    * on executors in `defaultParallelism` tasks (each read counts in
+    * the task's input records and bytes).
+    */
+  private def readTree(spark: SparkSession, outRoot: String,
+      suffix: String): RDD[(String, Array[Byte])] = {
+    val root = new java.io.File(outRoot).getAbsolutePath
+    val sc = spark.sparkContext
+    sc.parallelize(listTree(root).filter(_.endsWith(suffix)), sc.defaultParallelism)
+      .map { rel =>
+        val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, rel))
+        GraftInputMetrics.recordRead(bytes.length.toLong)
+        (rel, bytes)
+      }
+  }
+
+  /** Serializes one block's TIFFs and KTX and writes those not in
+    * `done`: (level, relpath, n_bytes, written 0/1) per file.
+    */
+  private def writeBlock(outRoot: String, done: Set[String], total: Int,
+      level: Int, bz: Long, by: Long, bx: Long,
+      vox: Seq[(Long, Long, Long, Long, Long)]): Seq[(Long, String, Long, Long)] = {
+    val rel = relOf(level, bz, by, bx)
+    val pre = if (rel.isEmpty) "" else rel + "/"
+    val tiffs = vox.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, vs) =>
+      (pre + s"default.$c.tif",
+        TiffBinary.serialize(vs.map(t => (t._2, t._3, t._4, t._5))))
+    }
+    val (_, ktxName, ktxBytes) = KtxBinary.serializeAt(level, total, bz, by, bx, vox)
+    (tiffs :+ (pre + ktxName, ktxBytes)).map { case (relPath, bytes) =>
+      val skip = done.contains(relPath)
+      if (!skip) {
+        val f = new java.io.File(s"$outRoot/$relPath")
+        Option(f.getParentFile).foreach(_.mkdirs())
+        java.nio.file.Files.write(f.toPath, bytes): Unit
+      }
+      (level.toLong, relPath, bytes.length.toLong, if (skip) 0L else 1L)
+    }
   }
 
   /** Write the per-level octant tree from a pyramid frame
     * ((level, c, z, y, x, v) level-local coords): for every occupied
     * block at every level, one strip TIFF per nonempty channel
     * (reference skips empty channels, tiff2octree.py:312) and one
-    * interleaved KTX with its in-file arthur mip chain. With
+    * interleaved KTX with its in-file arthur mip chain. Blocks are
+    * hash-partitioned on their key into `defaultParallelism` tasks and
+    * sorted within each, so every task serializes the runs of equal
+    * keys it holds (an explicit partition count, which adaptive
+    * execution does not coalesce). The tree's depth for the KTX
+    * `multiscale_total_levels` entry is the frame's max level, one
+    * small driver-side aggregate; a leaf-only (crashed) write has the
+    * same max level, so a resumed tree is byte-identical. With
     * `skipExisting` the current tree listing is broadcast and
     * already-written files are skipped — `check_block`:359's resume,
     * as a set-difference instead of a per-file probe. Returns the
@@ -73,31 +128,26 @@ object OctreePipeline {
       skipExisting: Boolean = false): DataFrame = {
     import spark.implicits._
     val doneB = spark.sparkContext.broadcast(
-      if (skipExisting) listTree(outRoot) else Set.empty[String])
+      if (skipExisting) listTree(outRoot).toSet else Set.empty[String])
+    val depth = pyr.agg(max(col("level")).cast("int")).head()
+    val total = if (depth.isNullAt(0)) 0 else depth.getInt(0)
+    val key = Seq("level", "bz", "by", "bx").map(col)
     Addressing.blockify(pyr)
-      .select(col("level"), col("bz"), col("by"), col("bx"),
-        col("c"), col("lz"), col("ly"), col("lx"), col("v"))
+      .select(key ++ Seq("c", "lz", "ly", "lx", "v").map(col): _*)
+      .repartition(spark.sparkContext.defaultParallelism, key: _*)
+      .sortWithinPartitions(key: _*)
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .groupByKey(t => (t._1, t._2, t._3, t._4))
-      .flatMapGroups { (key: (Long, Long, Long, Long),
-          it: Iterator[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]) =>
-        val (level, bz, by, bx) = (key._1.toInt, key._2, key._3, key._4)
-        val vox = it.map(t => (t._5, t._6, t._7, t._8, t._9)).toSeq
-        val rel = relOf(level, bz, by, bx)
-        val pre = if (rel.isEmpty) "" else rel + "/"
-        val tiffs = vox.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, vs) =>
-          (pre + s"default.$c.tif",
-            TiffBinary.serialize(vs.map(t => (t._2, t._3, t._4, t._5))))
-        }
-        val (_, ktxName, ktxBytes) = KtxBinary.serializeAt(level, bz, by, bx, vox)
-        (tiffs :+ (pre + ktxName, ktxBytes)).map { case (relPath, bytes) =>
-          val skip = doneB.value.contains(relPath)
-          if (!skip) {
-            val f = new java.io.File(s"$outRoot/$relPath")
-            Option(f.getParentFile).foreach(_.mkdirs())
-            java.nio.file.Files.write(f.toPath, bytes): Unit
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val (level, bz, by, bx) = (in.head._1, in.head._2, in.head._3, in.head._4)
+          val vox = Seq.newBuilder[(Long, Long, Long, Long, Long)]
+          while (in.hasNext && in.head._1 == level && in.head._2 == bz &&
+              in.head._3 == by && in.head._4 == bx) {
+            val t = in.next()
+            vox += ((t._5, t._6, t._7, t._8, t._9))
           }
-          (level.toLong, relPath, bytes.length.toLong, if (skip) 0L else 1L)
+          writeBlock(outRoot, doneB.value, total, level.toInt, bz, by, bx, vox.result())
         }
       }
       .toDF("level", "rel", "n_bytes", "written")
@@ -138,12 +188,11 @@ object OctreePipeline {
       kv("sx").toDouble, kv("sy").toDouble, kv("sz").toDouble, kv("nl").toLong)
   }
 
-  /** (level, 0-based block coords, channel) from a tree file path —
+  /** (level, 0-based block coords, file name) from a tree relpath —
     * level = octant-digit dir count + 1.
     */
-  private def blockOfPath(path: String, rootName: String): (Int, Long, Long, Long, String) = {
-    val segs = path.split('/')
-    val parts = segs.drop(segs.lastIndexOf(rootName) + 1)
+  private def blockOfPath(rel: String): (Int, Long, Long, Long, String) = {
+    val parts = rel.split('/')
     val digits = parts.dropRight(1)
     val level = digits.length + 1
     var (bz, by, bx) = (0L, 0L, 0L)
@@ -157,18 +206,16 @@ object OctreePipeline {
 
   /** The whole pyramid decoded from nothing but read-back TIFF bytes:
     * (level, c, z, y, x, v) with level-local coordinates — must equal
-    * the oct_pyramid oracle exactly (zeros drop on both sides).
+    * the oct_pyramid oracle exactly (zeros drop on both sides). The
+    * `.tif` files of the tree listing are read and decoded in
+    * `defaultParallelism` executor tasks; level, block and channel
+    * come from each file's relpath.
     */
   def parseTiffTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val rootName = new java.io.File(outRoot).getName
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (level, bz, by, bx, name) = blockOfPath(path, rootName)
+    readTree(spark, outRoot, ".tif")
+      .flatMap { case (rel, bytes) =>
+        val (level, bz, by, bx, name) = blockOfPath(rel)
         val c = name.stripPrefix("default.").stripSuffix(".tif").toLong
         TiffBinary.decodePages(bytes).flatMap { case (z, w, h, bits, comp, off, nb) =>
           require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
@@ -185,16 +232,14 @@ object OctreePipeline {
   }
 
   /** The same frame decoded INDEPENDENTLY from the KTX files' mip-0
-    * payloads (level inferred from each file's octree_path kv entry).
+    * payloads (level inferred from each file's octree_path kv entry,
+    * not from its relpath), read like [[parseTiffTree]] from the
+    * `.ktx` files of the tree listing.
     */
   def parseKtxTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.ktx")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .select(col("content")).as[Array[Byte]]
-      .flatMap { bytes =>
+    readTree(spark, outRoot, ".ktx")
+      .flatMap { case (_, bytes) =>
         val (level, bz, by, bx, vox) = KtxBinary.decodeMip0Any(bytes)
         vox.map { case (c, lz, ly, lx, v) =>
           (level.toLong, c, (bz - 1) * Leaf + lz, (by - 1) * Leaf + ly,
@@ -211,24 +256,19 @@ object OctreePipeline {
     * bytes, and the same count/checksum INDEPENDENTLY from the KTX
     * mip-0 bytes — the oracle predicts all of it from the DuckDB
     * pyramid reconstruction, so one green row certifies both formats
-    * agree with the model and with each other.
+    * agree with the model and with each other. File counts come from
+    * the same tree listing the read-back reads.
     */
   def audit(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val rootName = new java.io.File(outRoot).getName
-    def fileLevels(glob: String): DataFrame =
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(outRoot)
-        .select(col("path")).as[String]
-        .map(p => blockOfPath(p, rootName)._1.toLong)
-        .toDF("level")
+    val files = listTree(outRoot)
+    def fileLevels(suffix: String): DataFrame =
+      files.filter(_.endsWith(suffix)).map(p => blockOfPath(p)._1.toLong).toDF("level")
     val cksum = (((col("z") * Grid + col("y")) * Grid + col("x")) * 2
       + col("c") + 1) * col("v")
-    val tifFiles = fileLevels("*.tif").groupBy("level")
+    val tifFiles = fileLevels(".tif").groupBy("level")
       .agg(count(lit(1)).as("n_tif_files"))
-    val ktxFiles = fileLevels("*.ktx").groupBy("level")
+    val ktxFiles = fileLevels(".ktx").groupBy("level")
       .agg(count(lit(1)).as("n_ktx_files"))
     val tifVox = parseTiffTree(spark, outRoot).groupBy("level")
       .agg(count(lit(1)).as("n_voxels"), sum("v").as("sum_v"),

@@ -119,4 +119,48 @@ class OctreePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
     assert(tif === model)
   }
+
+  test("tree bytes and read-back do not depend on partitioning") {
+    def rowSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (0 until 6).map(r.getLong)).toSet
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = try Seq(1, 4).map { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      val root = s"$tmp/parts$n"
+      // a different input partitioning, so blocks reach the serializers
+      // with their voxels in a different order
+      OctreePipeline.writeTree(spark, pyr.repartition(n), root).count()
+      val tif = OctreePipeline.parseTiffTree(spark, root)
+      val ktx = OctreePipeline.parseKtxTree(spark, root)
+      (hashTree(root), rowSet(tif), rowSet(ktx),
+        tif.rdd.getNumPartitions, ktx.rdd.getNumPartitions)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val Seq(one, four) = runs
+    assert(one._1.nonEmpty && one._1 === four._1)
+    assert(one._2.nonEmpty && one._2 === four._2)
+    assert(one._3 === four._3 && one._2 === one._3)
+    val cores = spark.sparkContext.defaultParallelism
+    runs.foreach { r => assert((r._4, r._5) === ((cores, cores))) }
+  }
+
+  test("KTX files carry the tree's depth and their own level") {
+    import spark.implicits._
+    // 32³ → four levels of 4³ leaf blocks; a sparse diagonal fill
+    val vox = (for {
+      z <- 0L until 32; y <- 0L until 32; x <- 0L until 32
+      if (z + 2 * y + 3 * x) % 7 == 0
+    } yield (z % 2, z, y, x, 1L + (z * 31 + y * 7 + x) % 1000))
+      .toDF("c", "z", "y", "x", "v")
+    val root = s"$tmp/depth4"
+    OctreePipeline.writeTree(spark, Pyramid(vox, levels = 4), root).count()
+    def kv(rel: String): Map[String, String] = KtxBinary.keyValues(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, rel))).toMap
+    val ktx = hashTree(root).keys.filter(_.endsWith(".ktx")).toSeq.sorted
+    val leaf = ktx.find(_.count(_ == '/') == 3).get
+    val rootKv = kv(ktx.find(!_.contains('/')).get)
+    assert(rootKv("multiscale_level_id") === "0")
+    assert(rootKv("multiscale_total_levels") === "4")
+    assert(kv(leaf)("multiscale_level_id") === "3")
+    assert(kv(leaf)("multiscale_total_levels") === "4")
+  }
 }

@@ -61,6 +61,39 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(affCubes < 8, s"delta touches all $affCubes coarsest cubes — prune is vacuous")
   }
 
+  // 8³, levels=3: a sparse base and the rows of the incremental contract
+  private def baseVolume = vox((for {
+    z <- 0L until 8; y <- 0L until 8; x <- 0L until 8
+    if (z * 7 + y * 5 + x * 3) % 4 == 0
+  } yield (0L, z, y, x, 1L + (z * 64 + y * 8 + x) % 97)): _*)
+
+  /** Pyramid rows as a sorted multiset, so duplicate rows count. */
+  private def pyramidRows(df: org.apache.spark.sql.DataFrame) = df
+    .select("level", "c", "z", "y", "x", "v").collect()
+    .map(r => (0 until 6).map(r.getLong)).toSeq
+    .sortBy(_.mkString(","))
+
+  test("incremental pyramid with an empty delta equals the base pyramid") {
+    import graft.octree.Pyramid
+    val base = baseVolume
+    val delta = vox()
+    assert(pyramidRows(Pyramid.incremental(base, delta, levels = 3)) ===
+      pyramidRows(Pyramid(base.union(delta), levels = 3)))
+  }
+
+  test("incremental pyramid keeps a delta's duplicate coordinates like the union does") {
+    import graft.octree.Pyramid
+    val base = baseVolume
+    // some base coordinates again, with new values
+    val delta = base.filter((col("z") + col("y") + col("x")) % 5 === 0)
+      .withColumn("v", col("v") + 500)
+    assert(delta.count() > 0)
+    val want = pyramidRows(Pyramid(base.union(delta), levels = 3))
+    assert(pyramidRows(Pyramid.incremental(base, delta, levels = 3)) === want)
+    // the leaf level carries both rows of each shared coordinate
+    assert(want.count(_.head == 3L) === base.count() + delta.count())
+  }
+
   test("second_max takes the 2nd largest incl. implicit zeros; lone voxel prunes to empty") {
     assert(one(Downsample(group.union(lone), "second_max")) === Seq((0L, 30L)))
   }
